@@ -328,6 +328,11 @@ object Dedup {
   def dedupGroupsResult(ids: DataFrame, idCol: String, pairs: DataFrame,
                         maxIters: Int = 50): GroupsResult = {
     import org.apache.spark.storage.StorageLevel
+    // no round allowed: every id keeps its own label, and nothing shows
+    // that these labels are a fixed point
+    if (maxIters <= 0)
+      return GroupsResult(ids.select(col(idCol), col(idCol).as("group_id")),
+        converged = false, rounds = 0)
     // Both edge directions from ONE evaluation of `pairs` (explode of a
     // 2-struct array), not union(pairs, pairs.swap): the union shape
     // evaluates the whole upstream candidate pipeline TWICE inside the

@@ -507,33 +507,45 @@ object LakeTable {
   val DefaultEntriesPerManifest = 1000
 
   private val TsTypeKey = "spark.sql.parquet.outputTimestampType"
-  private val tsConfLock = new Object
-  private var tsConfDepth = 0
-  private var tsConfPrev: String = _
+  // per session: (lake writes in flight, the value the first one replaced)
+  private val tsOverrides = scala.collection.mutable.HashMap.empty[SparkSession, (Int, String)]
 
   /** Depth-counted session-conf override for the staging write's
     * TIMESTAMP_MICROS requirement: maintenance runs lake writes from
     * several threads (DeleteFrom/Compaction groups), so a naive
     * save/restore would race and could leave the OVERRIDE behind as the
-    * "saved" value. The outermost push saves the user's value, the last
-    * pop restores it. (While any lake write is in flight the session-wide
+    * "saved" value. Per session, the outermost push saves the user's value
+    * and the last pop restores it; sessions never see each other's depth
+    * or saved value. (While any lake write of a session is in flight its
     * value is MICROS — unavoidable for a key parquet only reads from
     * SQLConf — but between lake writes the user's setting is back.)
     */
-  private[lake] def pushMicrosTimestampConf(spark: SparkSession): Unit =
-    tsConfLock.synchronized {
-      if (tsConfDepth == 0) {
-        tsConfPrev = spark.conf.get(TsTypeKey)
+  private[graft] def pushMicrosTimestampConf(spark: SparkSession): Unit =
+    tsOverrides.synchronized {
+      val (depth, prev) = tsOverrides.getOrElse(spark, {
+        val prev = spark.conf.get(TsTypeKey)
         spark.conf.set(TsTypeKey, "TIMESTAMP_MICROS")
-      }
-      tsConfDepth += 1
+        (0, prev)
+      })
+      tsOverrides(spark) = (depth + 1, prev)
     }
 
-  private[lake] def popMicrosTimestampConf(spark: SparkSession): Unit =
-    tsConfLock.synchronized {
-      tsConfDepth -= 1
-      if (tsConfDepth == 0) spark.conf.set(TsTypeKey, tsConfPrev)
+  private[graft] def popMicrosTimestampConf(spark: SparkSession): Unit =
+    tsOverrides.synchronized {
+      val (depth, prev) = tsOverrides(spark)
+      if (depth > 1) tsOverrides(spark) = (depth - 1, prev)
+      else {
+        tsOverrides.remove(spark)
+        spark.conf.set(TsTypeKey, prev)
+      }
     }
+
+  /** Table-relative path (`data/<name>`) of the data file each row was read
+    * from — the provenance key that matches rows back to manifest entries,
+    * ledger tasks and sketch batches.
+    */
+  def inputDataPath: Column =
+    concat(lit("data/"), element_at(split(input_file_name(), "/"), -1))
 
   /** Age gate splitting crash-orphan snap files between the two mechanisms
     * that may touch them, so they can never race on the same file:

@@ -66,9 +66,6 @@ object DeleteFrom {
       convRange.map(r => s"|conv:${r._1}..${r._2}").getOrElse("") +
       turnRange.map(r => s"|turn:${r._1}..${r._2}").getOrElse("")
 
-    Ledger.committedJobSnapshot(table, jobId, "delete").foreach { s =>
-      return Result(s, 0L, 0, 0L, 0)
-    }
     val snap0 = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no table at ${table.root}"))
     if (table.currentFiles.isEmpty)
@@ -76,142 +73,89 @@ object DeleteFrom {
 
     val pred = expr(predSql)
     val totalFiles = snap0.manifests.map(_.entryCount).sum
+    // per-file victim counts, from the sidecar the plan wrote beside it
+    lazy val counts = readCounts(table, jobId).getOrElse(throw new IllegalStateException(
+      s"delete plan for $jobId exists but its victim counts are missing"))
+    // all-group sums: resumed groups count exactly like executed ones
+    def deleted(groups: Vector[Ledger.TaskRow]) =
+      groups.map(g => g.rows - g.outFiles.map(_.rows).sum).sum
+    def touched(groups: Vector[Ledger.TaskRow]) = groups.map(_.inFiles.size).sum
 
-    // ---- plan: predicate-derived pruning + per-file victim counts -------
-    val (plan, counts) = Ledger.readPlan(table, jobId) match {
-      case Some(p) =>
-        require(p.kind == planKind,
-          s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
-            s"'$planKind' — job-id collision or changed predicate; use a " +
-            "fresh jobId")
-        require(table.currentSnapshotId.contains(p.baseSnapshotId),
-          s"stale plan for $jobId (base ${p.baseSnapshotId}, " +
-            s"current ${table.currentSnapshotId})")
-        val c = readCounts(table, jobId).getOrElse(throw new IllegalStateException(
-          s"delete plan for $jobId exists but its victim counts are missing"))
-        (p, c)
-      case None =>
-        // The prune boxes come from the PREDICATE — hints are validated,
-        // never trusted: a hint that cannot contain every derived box means
-        // the predicate may match outside it (a partial DELETE that would
-        // look successful), so fail loudly instead.
-        val boxes = IntervalDnf.extract(
-          IntervalDnf.analyzedCondition(spark, table.schema.toStruct, predSql))
-        convRange.foreach { case (lo, hi) =>
-          require(boxes.forall(_.conv.within(lo, hi)),
-            s"convRange hint [$lo..$hi] is narrower than what the predicate " +
-              s"'$predSql' can match — a hinted DELETE must never silently " +
-              "skip matching rows; drop the hint or widen it")
-        }
-        turnRange.foreach { case (lo, hi) =>
-          require(boxes.forall(_.turn.within(lo, hi)),
-            s"turnRange hint [$lo..$hi] is narrower than what the predicate " +
-              s"'$predSql' can match; drop the hint or widen it")
-        }
-        val pruned = table.overlappingEntriesBoxes(snap0, boxes)
-        // ONE pass over the candidates: matching rows per file. Catalyst
-        // prunes the read to the predicate's columns; the result is
-        // metadata-sized (one row per file WITH victims).
-        val perFile: Map[String, Long] =
-          if (pruned.entries.isEmpty) Map.empty
-          else table.readData(pruned.entries.map(e => table.absData(e.file.path)))
-            .where(coalesce(pred.cast("boolean"), lit(false)))
-            .groupBy(concat(lit("data/"),
-              element_at(split(input_file_name(), "/"), -1)).as("__src"))
-            .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        // counts sidecar FIRST, plan second: a plan on disk implies its
-        // counts exist, so resume never trusts a half-planned job
-        writeCounts(table, jobId, predSql, perFile,
-          prunedCandidates = pruned.entries.size.toLong)
-        val byPath = pruned.entries.map(e => e.file.path -> e.file).toMap
-        val withVictims = perFile.keys.toVector.sorted.map(byPath(_))
-        val groups = Clustering.greedyGroups(
-          withVictims.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
-          groupTargetBytes).filter(_.nonEmpty)
-        Ledger.writePlan(table, jobId, snap0.id, groups.map(_.map(_.path)),
-          kind = planKind)
-        (Ledger.readPlan(table, jobId).get, perFile)
-    }
-    if (plan.groups.isEmpty || plan.groups.forall(_.isEmpty)) {
-      // predicate matched nothing: commit NOTHING — zero file churn
-      Ledger.markCommitted(table, jobId, "delete", snap0.id)
-      return Result(snap0, 0L, 0, totalFiles, 0,
-        candidateFiles = 0L, totalFiles = totalFiles)
-    }
-
-    val entryByPath = table.currentEntries.map(e => e.file.path -> e).toMap
-    val done = Ledger.readTasks(table, jobId).filter(_._2.state == "done")
-    val resumedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val executedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val deletedRows = new java.util.concurrent.atomic.AtomicLong(0L)
-
-    def runGroup(paths: Vector[String], gi: Int): Vector[DataFile] =
-      done.get(gi) match {
-        case Some(t) =>
-          resumedCount.incrementAndGet()
-          deletedRows.addAndGet(t.rows - t.outFiles.map(_.rows).sum)
-          t.outFiles
-        case None =>
-          val t0 = System.nanoTime()
-          val inFiles = paths.map(entryByPath(_).file)
-          val rows = inFiles.map(_.rows).sum
-          val bytes = inFiles.map(_.bytes).sum
-          val victims = paths.map(counts.getOrElse(_, 0L)).sum
-          val nSurv = rows - victims
-          try {
-            if (executedCount.getAndIncrement() >= interruptAfter)
-              throw new InterruptedException(s"chaos interrupt after $interruptAfter groups")
-            val out =
-              if (nSurv == 0L) Vector.empty[DataFile]
-              else {
-                val nOut = math.max(1, math.ceil(nSurv.toDouble / targetFileRows).toInt)
-                // survivors = NOT matching; null predicate results survive
-                // too (SQL DELETE: only rows where the condition is TRUE
-                // are deleted). Single scan — no separate count.
-                table.writeDataFiles(
-                  table.readData(paths.map(table.absData))
-                    .where(!coalesce(pred.cast("boolean"), lit(false)))
-                    .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
-                    .sortWithinPartitions("conv_id", "turn_idx"),
-                  s"$jobId-g$gi")
-              }
-            val written = out.map(_.rows).sum
-            require(written == nSurv,
-              s"DELETE group $gi wrote $written survivors but the plan " +
-                s"counted $nSurv — non-deterministic predicate? refusing to commit")
-            deletedRows.addAndGet(victims)
-            Ledger.writeTask(table, Ledger.TaskRow(jobId, gi, "done", paths,
-              out, rows, bytes, (System.nanoTime() - t0) / 1000000))
-            out
-          } catch { case e: Throwable =>
-            Ledger.writeTask(table, Ledger.TaskRow(jobId, gi, "error", paths,
-              Vector.empty, rows, bytes, (System.nanoTime() - t0) / 1000000,
-              errorMessage = String.valueOf(e.getMessage)))
-            throw e
+    val run = Ledger.rewrite(table, jobId, "delete", kind = planKind,
+      parallelism = math.max(2, spark.sparkContext.defaultParallelism / 8),
+      interruptAfter = interruptAfter,
+      summary = groups => Map("predicate" -> predSql,
+        "deleted_rows" -> deleted(groups).toString,
+        "touched_files" -> touched(groups).toString)) {
+      // ---- plan: predicate-derived pruning + per-file victim counts -----
+      // The prune boxes come from the PREDICATE — hints are validated,
+      // never trusted: a hint that cannot contain every derived box means
+      // the predicate may match outside it (a partial DELETE that would
+      // look successful), so fail loudly instead.
+      val boxes = IntervalDnf.extract(
+        IntervalDnf.analyzedCondition(spark, table.schema.toStruct, predSql))
+      convRange.foreach { case (lo, hi) =>
+        require(boxes.forall(_.conv.within(lo, hi)),
+          s"convRange hint [$lo..$hi] is narrower than what the predicate " +
+            s"'$predSql' can match — a hinted DELETE must never silently " +
+            "skip matching rows; drop the hint or widen it")
+      }
+      turnRange.foreach { case (lo, hi) =>
+        require(boxes.forall(_.turn.within(lo, hi)),
+          s"turnRange hint [$lo..$hi] is narrower than what the predicate " +
+            s"'$predSql' can match; drop the hint or widen it")
+      }
+      val pruned = table.overlappingEntriesBoxes(snap0, boxes)
+      // ONE pass over the candidates: matching rows per file. Catalyst
+      // prunes the read to the predicate's columns; the result is
+      // metadata-sized (one row per file WITH victims).
+      val perFile: Map[String, Long] =
+        if (pruned.entries.isEmpty) Map.empty
+        else table.readData(pruned.entries.map(e => table.absData(e.file.path)))
+          .where(coalesce(pred.cast("boolean"), lit(false)))
+          .groupBy(LakeTable.inputDataPath.as("__src"))
+          .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // counts sidecar FIRST, plan second: a plan on disk implies its
+      // counts exist, so resume never trusts a half-planned job
+      writeCounts(table, jobId, predSql, perFile,
+        prunedCandidates = pruned.entries.size.toLong)
+      val byPath = pruned.entries.map(e => e.file.path -> e.file).toMap
+      val withVictims = perFile.keys.toVector.sorted.map(byPath(_))
+      Ledger.Plan(Clustering.greedyGroups(
+        withVictims.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
+        groupTargetBytes).filter(_.nonEmpty).map(_.map(_.path)))
+    } { _ =>
+      val victimsByFile = counts // a resumed plan fails here, before any group, without its sidecar
+      group => {
+        val nSurv = group.rows - group.paths.map(victimsByFile.getOrElse(_, 0L)).sum
+        val out =
+          if (nSurv == 0L) Vector.empty[DataFile]
+          else {
+            val nOut = math.max(1, math.ceil(nSurv.toDouble / targetFileRows).toInt)
+            // survivors = NOT matching; null predicate results survive
+            // too (SQL DELETE: only rows where the condition is TRUE
+            // are deleted). Single scan — no separate count.
+            table.writeDataFiles(
+              table.readData(group.paths.map(table.absData))
+                .where(!coalesce(pred.cast("boolean"), lit(false)))
+                .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
+                .sortWithinPartitions("conv_id", "turn_idx"),
+              s"$jobId-g${group.index}")
           }
+        val written = out.map(_.rows).sum
+        require(written == nSurv,
+          s"DELETE group ${group.index} wrote $written survivors but the plan " +
+            s"counted $nSurv — non-deterministic predicate? refusing to commit")
+        out
       }
+    }
+    if (run.replayed) return Result(run.snapshot, 0L, 0, 0L, 0)
 
-    val indexed = plan.groups.zipWithIndex
-    val outputs =
-      if (interruptAfter != Int.MaxValue) indexed.map { case (p, gi) => runGroup(p, gi) }
-      else Parallel.mapInParallel(indexed,
-        parallelism = math.max(2, spark.sparkContext.defaultParallelism / 8)) {
-        case (p, gi) => runGroup(p, gi)
-      }
-
-    // removed = ONLY the files with victims — everything else (files AND
-    // manifests) carries forward untouched, names unchanged
-    val removed = plan.groups.flatten.sorted.map(entryByPath(_))
-    val nDeleted = deletedRows.get()
-    val carried = totalFiles - removed.size
-    val snap = table.commitDelta(outputs.flatten, removed, "delete",
-      summary = Map("job_id" -> jobId,
-        "predicate" -> predSql,
-        "deleted_rows" -> nDeleted.toString,
-        "touched_files" -> removed.size.toString))
-    Ledger.markCommitted(table, jobId, "delete", snap.id)
-    Result(snap, nDeleted, removed.size, carried, resumedCount.get(),
-      candidateFiles = counts.size.toLong, totalFiles = totalFiles,
+    // the commit removed ONLY the files with victims — everything else
+    // (files AND manifests) carried forward untouched, names unchanged
+    val nTouched = touched(run.tasks)
+    Result(run.snapshot, deleted(run.tasks), nTouched, totalFiles - nTouched,
+      run.resumed, candidateFiles = counts.size.toLong, totalFiles = totalFiles,
       prunedCandidateFiles = readPrunedCandidates(table, jobId)
         .getOrElse(counts.size.toLong))
   }

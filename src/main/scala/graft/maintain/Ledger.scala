@@ -1,9 +1,8 @@
 package graft.maintain
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -35,9 +34,15 @@ object Ledger {
 
   // ---- plan -------------------------------------------------------------
 
-  final case class Plan(baseSnapshotId: Long, groups: Vector[Vector[String]],
-                        convCuts: Array[Long], turnCuts: Array[Long],
-                        curve: String = "z", kind: String = "")
+  /** A job plan: task -> input files, plus the quantile cuts and curve a
+    * clustering job lays its groups out by. [[rewrite]] stamps the base
+    * snapshot and the kind when it persists a fresh plan.
+    */
+  final case class Plan(groups: Vector[Vector[String]],
+                        convCuts: Array[Long] = Array.empty,
+                        turnCuts: Array[Long] = Array.empty,
+                        curve: String = "z", baseSnapshotId: Long = -1L,
+                        kind: String = "")
 
   /** Persist the job plan (task -> input files, base snapshot, quantile
     * cuts) before any work starts; resume MUST reuse the stored plan — and
@@ -70,9 +75,9 @@ object Ledger {
       }.toVector
       def longs(k: String): Array[Long] = Option(n.get(k)).map(
         _.elements().asScala.map(_.asLong).toArray).getOrElse(Array.empty)
-      Some(Plan(n.get("base_snapshot_id").asLong, groups,
-        longs("conv_cuts"), longs("turn_cuts"),
+      Some(Plan(groups, longs("conv_cuts"), longs("turn_cuts"),
         Option(n.get("curve")).map(_.asText).getOrElse("z"),
+        n.get("base_snapshot_id").asLong,
         Option(n.get("kind")).map(_.asText).getOrElse("")))
     }
   }
@@ -195,6 +200,111 @@ object Ledger {
         t.rows, t.bytes, t.durationMs, t.errorMessage))
     rows.toDF("job_id", "task_id", "state", "n_in_files", "n_out_files",
       "rows", "bytes", "duration_ms", "error_message")
+  }
+
+  // ---- the rewrite runner ----------------------------------------------
+
+  /** One planned group of input files; `index` is its task id. */
+  final case class Group(index: Int, files: Vector[DataFile]) {
+    def paths: Vector[String] = files.map(_.path)
+    def rows: Long = files.map(_.rows).sum
+  }
+
+  /** What [[rewrite]] did. `snapshot` is the job's commit: the one an
+    * earlier run made when `replayed`, the current snapshot when the plan
+    * had nothing to rewrite. `tasks` holds every group's `done` row in plan
+    * order (empty for a replay or an empty plan); `resumed` of them were
+    * checkpointed by an earlier, interrupted run.
+    */
+  final case class Rewritten(snapshot: Snapshot, tasks: Vector[TaskRow],
+                             resumed: Int, replayed: Boolean)
+
+  /** The checkpoint protocol every file-rewriting maintenance job shares
+    * (compaction, clustering, dedupe, DELETE) — the reference's
+    * pending -> processed/error task states (file_repository.py:95-109)
+    * applied to lake rewrites:
+    *   1. a job whose `operation` commit marker exists returns that
+    *      snapshot without work;
+    *   2. a persisted plan is resumed — NEVER recomputed — when its kind
+    *      matches and its base is still the current snapshot; otherwise
+    *      `plan` runs and is persisted before any group starts;
+    *   3. an empty plan marks the job committed at the current snapshot, so
+    *      a replay is O(1) and [[expireJobs]] can sweep its directory;
+    *   4. a group whose task row is `done` reuses its outputs verbatim;
+    *      every other group runs `rewriteGroup(plan)` and checkpoints a
+    *      `done` row, or an `error` row with the message before rethrowing;
+    *   5. one commitDelta swaps every input for every output (the snapshot
+    *      summary gets `job_id` plus `summary(tasks)`), then the marker.
+    * Groups are submitted `parallelism` at a time. With `interruptAfter`
+    * set they run in plan order, and the job aborts like a crash once that
+    * many groups executed — the chaos hook the resume tests drive.
+    */
+  def rewrite(table: LakeTable, jobId: String, operation: String, kind: String,
+              parallelism: Int, interruptAfter: Int = Int.MaxValue,
+              summary: Vector[TaskRow] => Map[String, String])(
+              plan: => Plan)(
+              rewriteGroup: Plan => Group => Vector[DataFile]): Rewritten = {
+    committedJobSnapshot(table, jobId, operation).foreach { s =>
+      return Rewritten(s, Vector.empty, 0, replayed = true)
+    }
+    val p = readPlan(table, jobId) match {
+      case Some(p) =>
+        // plans written before kinds existed (compaction, clustering) carry none
+        require(p.kind == kind || (p.kind.isEmpty && kind == operation),
+          s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
+            s"'$kind' — job-id collision, changed parameters or changed " +
+            "predicate; use a fresh jobId")
+        require(table.currentSnapshotId.contains(p.baseSnapshotId),
+          s"ledger plan for $jobId was computed on snapshot ${p.baseSnapshotId} " +
+            s"but current is ${table.currentSnapshotId}; stale plan")
+        p
+      case None =>
+        val base = table.currentSnapshotId.get
+        val fresh = plan
+        writePlan(table, jobId, base, fresh.groups, fresh.convCuts,
+          fresh.turnCuts, fresh.curve, kind)
+        readPlan(table, jobId).get
+    }
+    if (p.groups.forall(_.isEmpty)) {
+      val cur = table.currentSnapshot.get
+      markCommitted(table, jobId, operation, cur.id)
+      return Rewritten(cur, Vector.empty, 0, replayed = false)
+    }
+
+    val entryByPath = table.currentEntries.map(e => e.file.path -> e).toMap
+    val done = readTasks(table, jobId).filter(_._2.state == "done")
+    val rewriteOne = rewriteGroup(p)
+    val executed = new java.util.concurrent.atomic.AtomicInteger(0)
+    def runGroup(g: Group): TaskRow = done.getOrElse(g.index, {
+      val t0 = System.nanoTime()
+      def row(state: String, out: Vector[DataFile], error: String = "") =
+        TaskRow(jobId, g.index, state, g.paths, out, g.rows, g.files.map(_.bytes).sum,
+          (System.nanoTime() - t0) / 1000000, error)
+      try {
+        if (executed.getAndIncrement() >= interruptAfter)
+          throw new InterruptedException(s"chaos interrupt after $interruptAfter groups")
+        val ok = row("done", rewriteOne(g))
+        writeTask(table, ok)
+        ok
+      } catch { case e: Throwable =>
+        // resume recomputes the group; writeTask's atomic replace flips
+        // its row from error to done on success
+        writeTask(table, row("error", Vector.empty, String.valueOf(e.getMessage)))
+        throw e
+      }
+    })
+    val groups = p.groups.zipWithIndex.map { case (paths, i) =>
+      Group(i, paths.map(entryByPath(_).file))
+    }
+    val tasks =
+      if (interruptAfter != Int.MaxValue) groups.map(runGroup)
+      else Parallel.mapInParallel(groups, parallelism)(runGroup)
+
+    val removed = p.groups.flatten.distinct.sorted.map(entryByPath)
+    val snap = table.commitDelta(tasks.flatMap(_.outFiles), removed, operation,
+      summary = Map("job_id" -> jobId) ++ summary(tasks))
+    markCommitted(table, jobId, operation, snap.id)
+    Rewritten(snap, tasks, tasks.count(t => done.contains(t.taskId)), replayed = false)
   }
 
   // ---- ledger expiry ------------------------------------------------------

@@ -165,8 +165,7 @@ object Sketches {
     val rows = table.readData(absPaths)
       .select(col("conv_id"), col("turn_idx"),
         Dedup.normalizedText(col("text")).as("__tn"),
-        concat(lit("data/"),
-          element_at(split(input_file_name(), "/"), -1)).as("__src"))
+        LakeTable.inputDataPath.as("__src"))
       .select(col("conv_id"), col("turn_idx"),
         Dedup.minhashSignatureNative(col("__tn"), params.shingleK, params.numHashes)
           .as("minhash"),

@@ -309,6 +309,10 @@ class DedupSpec extends AnyFunSuite {
     val capped = Dedup.dedupGroupsResult(ids, "doc_id", pairs, maxIters = 2)
     assert(!capped.converged && capped.rounds == 2)
     assert(capped.groups.select("group_id").distinct().count() > 1)
+    // a cap of 0 allows no round at all: identity labels, not converged
+    val none = Dedup.dedupGroupsResult(ids, "doc_id", pairs, maxIters = 0)
+    assert(!none.converged && none.rounds == 0)
+    assert(none.groups.as[(Long, Long)].collect().forall { case (id, g) => id == g })
     val full = Dedup.dedupGroupsResult(ids, "doc_id", pairs)
     assert(full.converged)
     assert(full.rounds < 10, s"pointer jumping must need ~log(40) rounds, took ${full.rounds}")

@@ -42,6 +42,24 @@ class LakeSpec extends AnyFunSuite {
     } finally spark.conf.set(key, before)
   }
 
+  test("timestamp-type override is per session: concurrent sessions keep their own values") {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val other = spark.newSession()
+    val before = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "INT96")
+      other.conf.set(key, "TIMESTAMP_MILLIS")
+      LakeTable.pushMicrosTimestampConf(spark)
+      LakeTable.pushMicrosTimestampConf(other)
+      assert(spark.conf.get(key) == "TIMESTAMP_MICROS" && other.conf.get(key) == "TIMESTAMP_MICROS",
+        "both sessions write MICROS while their lake writes are in flight")
+      LakeTable.popMicrosTimestampConf(spark)
+      assert(spark.conf.get(key) == "INT96" && other.conf.get(key) == "TIMESTAMP_MICROS")
+      LakeTable.popMicrosTimestampConf(other)
+      assert(other.conf.get(key) == "TIMESTAMP_MILLIS", "each session gets its own value back")
+    } finally spark.conf.set(key, before)
+  }
+
   test("append + scan roundtrip preserves every turn") {
     val t = LakeTable.create(spark, tmpTable("roundtrip"), TranscriptSynth.schema)
     val data = synth(50)
@@ -697,6 +715,26 @@ class LakeSpec extends AnyFunSuite {
     assert(again.snapshot.map(_.id) == res.snapshot.map(_.id))
   }
 
+  test("compaction: interrupted job resumes its checkpointed bin, content identical") {
+    val t = LakeTable.create(spark, tmpTable("compact-resume"), TranscriptSynth.schema)
+    t.append(synth(40).repartition(4), "init")
+    val pre = sortedRows(t.scan().df)
+    val files = t.currentFiles
+    val bins = Vector(files.take(2), files.drop(2))
+    Ledger.writePlan(t, "cres", t.currentSnapshotId.get, bins.map(_.map(_.path)),
+      kind = "compact")
+    // bin 0 finished before the crash: its outputs are checkpointed
+    val out0 = t.writeDataFiles(t.readData(bins(0).map(f => t.absData(f.path))), "cres-b0")
+    Ledger.writeTask(t, Ledger.TaskRow("cres", 0, "done", bins(0).map(_.path), out0,
+      bins(0).map(_.rows).sum, bins(0).map(_.bytes).sum, 1))
+    val res = Compaction.compact(t, "cres")
+    assert(res.bins == 2 && res.resumedBins == 1 && res.filesCompacted == 4)
+    assert(out0.forall(f => t.currentFiles.exists(_.path == f.path)),
+      "the resumed bin's outputs are committed verbatim")
+    assert(t.currentFiles.size == out0.size + 1)
+    assert(sortedRows(t.scan().df) == pre, "resume must not change content")
+  }
+
   test("clustering cold pass: >=90% file prune on conv range from a random layout") {
     val t = LakeTable.create(spark, tmpTable("cluster"), TranscriptSynth.schema)
     val data = synth(600)
@@ -1068,6 +1106,21 @@ class LakeSpec extends AnyFunSuite {
     // replaying the swept job id is a cheap incremental no-op, not a rerun
     val replay = Clustering.cluster(t, "old-cluster")
     assert(replay.rowsRewritten == 0L)
+  }
+
+  test("ledger expiry: no-op compaction and clustering jobs are committed and swept") {
+    val t = LakeTable.create(spark, tmpTable("ledger-noop"), TranscriptSynth.schema)
+    t.append(synth(40).repartition(1), "init") // one file: nothing to pack
+    Maintenance.runCycle(t, "c1")
+    val r2 = Maintenance.runCycle(t, "c2") // clean table: both jobs no-ops
+    assert(r2.compact.snapshot.isEmpty && r2.compact.bins == 0 && r2.cluster.groups == 0)
+    // a replay after later commits (c1's cluster) answers from the marker
+    // instead of tripping the stale-plan check
+    val replay = Maintenance.runCycle(t, "c1")
+    assert(replay.compact.bins == 0 && replay.cluster.rowsRewritten == 0L)
+    val res = Ledger.expireJobs(t, olderThanMs = 0, nowMs = System.currentTimeMillis() + 60000)
+    assert(res.deletedJobs.toSet == Set("c1-compact", "c1-cluster", "c2-compact", "c2-cluster"),
+      s"got ${res.deletedJobs}")
   }
 
   test("orphan GC sweeps unreferenced metadata (crashed-commit residue)") {
